@@ -330,13 +330,14 @@ object Bench {
     * weather, and >2 residual suspects mark the artifact degraded even
     * when nothing regressed. [[hostFactorOf]] measures that uniform band
     * once per run (3 pinned mid-weight probes, min-of-2 each, against
-    * their own best-knowns; median ratio, clamped to [1, 3]) and the
+    * their own best-knowns; lower median ratio, clamped to [1, 3]) and the
     * suspect bar becomes `2 × best × factor`: on a fast day factor ≈ 1
     * and the predicate is unchanged; on a uniformly slow day only
     * queries slow RELATIVE TO THE SESSION flag. A real plan regression
     * moves one query against the session band and still flags (the
     * probes are pinned, so a regression in an unrelated query cannot
-    * raise its own bar). */
+    * raise its own bar). Above [[SuspectRatioCeiling]] × best a query
+    * flags whatever the factor and floor bar say. */
   private[graft] def suspectsOf(results: Map[String, Double],
                          history: Map[String, Double],
                          hostFactor: Double,
@@ -344,8 +345,36 @@ object Bench {
     results.toSeq
       .filter { case (k, v) =>
         history.get(k).exists(b =>
-          v > 2 * b * hostFactor && v > math.max(1.0, floorBar)) }
+          (v > 2 * b * hostFactor && v > math.max(1.0, floorBar)) ||
+            // neither the host factor (≤ 3) nor the floor bar (≤ 2 s) may
+            // absorb a 6x regression: a 0.3 s query reading 1.9 s clears
+            // a 2 s floor bar but not this arm (the 1 s absolute floor
+            // still keeps sub-second jitter out)
+            (v > SuspectRatioCeiling * b && v > 1.0)) }
       .map(_._1).sorted
+
+  /** The ratio above best-known that flags whatever the session's host
+    * factor and floor bar say. */
+  private[graft] val SuspectRatioCeiling = 6.0
+
+  /** The conservative middle of a calibration sample: the LOWER median
+    * (for an even count, the smaller of the two middle values). Both
+    * calibrations only loosen the suspect bar as they grow, so the lower
+    * value is the one that keeps the bar tight. */
+  private[graft] def lowerMedian(xs: Seq[Double]): Double =
+    xs.sorted.apply((xs.size - 1) / 2)
+
+  /** A host factor this high is no longer ordinary host weather: the
+    * factor scales every bar, so a uniform engine-wide regression would be
+    * absorbed into it unnoticed. Still applied, but never silently. */
+  private[graft] val HostFactorWarnAbove = 2.0
+
+  private[graft] def hostFactorWarning(factor: Double): Option[String] =
+    if (factor <= HostFactorWarnAbove) None
+    else Some(f"[bench] WARNING host_factor $factor%.2f > $HostFactorWarnAbove%.1f: " +
+      "the probes ran this much slower than their best-knowns, and every " +
+      "suspect bar is loosened by it; an engine-wide regression would look " +
+      "the same — compare job/stage counts before trusting this run")
 
   /** Pinned host-factor probes: mid-weight (1.5-2.5 s best-known), shape-
     * diverse (similarity join / NB scan+model join / dedup weight fold),
@@ -398,14 +427,11 @@ object Bench {
       history.get(n).flatMap(b => minOf2(n).map(_ / b)))
     val factor =
       if (ratios.size < 2) 1.0
-      else {
-        val f = ratios.sorted.apply(ratios.size / 2)
-        math.min(3.0, math.max(1.0, f))
-      }
+      else math.min(3.0, math.max(1.0, lowerMedian(ratios)))
     val floors = FloorProbeNames.flatMap(minOf2)
     val floor =
       if (floors.size < 2) 0.5 // bar stays at the historical 1 s
-      else math.min(2.0, floors.sorted.apply(floors.size / 2))
+      else math.min(2.0, lowerMedian(floors))
     (factor, floor)
   }
 
@@ -522,6 +548,7 @@ object Bench {
     val (hostFactor, sessionFloor) = hostFactorOf(spark, sfDir, history)
     if (hostFactor > 1.0 || sessionFloor > 0.5)
       System.err.println(f"[bench] host factor $hostFactor%.2f, session floor $sessionFloor%.2f s — suspect bar 2 x best x factor, absolute arm ${math.max(1.0, 2 * sessionFloor)}%.2f s")
+    hostFactorWarning(hostFactor).foreach(System.err.println)
     // pass 1: unbudgeted — every query MUST get a number. Visit by
     // DESCENDING best-known cost (unknown-cost queries first), not map
     // order: the allocation-heavy tail queries meet the freshest heap

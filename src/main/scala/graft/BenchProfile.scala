@@ -27,6 +27,15 @@ import org.apache.spark.sql.SparkSession
   * The optional 4th arg sets runtime SQL confs (e.g.
   * `spark.sql.adaptive.enabled=false`) before any query runs, for
   * A/B-ing session knobs against the same query set.
+  *
+  * `order=pass` in the 4th arg runs the reps rep-major: each rep is one
+  * whole pass over the selected names, and a summary line per pass gives
+  * its generated-class compile count. The default (`order=query`) runs a
+  * query's reps back to back, so one query's handful of classes always
+  * stays in the JVM-wide codegen cache between its reps; the pass order
+  * re-runs a query only after every other selected query has compiled its
+  * classes, which is how a mixed workload meets the cache, and the warm
+  * passes' compile counts show whether the working set fits it.
   */
 object BenchProfile {
   def main(args: Array[String]): Unit = {
@@ -39,9 +48,12 @@ object BenchProfile {
       shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     var warmDir: Option[String] = None
+    var passOrder = false
     args.lift(3).foreach(_.split(",").filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
-      if (k == "warmDir") warmDir = Some(v) else spark.conf.set(k, v)
+      if (k == "warmDir") warmDir = Some(v)
+      else if (k == "order") passOrder = v == "pass"
+      else spark.conf.set(k, v)
     })
 
     val names: Seq[String] =
@@ -76,7 +88,7 @@ object BenchProfile {
     catch { case e: Throwable => System.err.println(s"warm-up failed: $e") }
 
     println(f"${"query"}%-28s rep ${"build"}%8s ${"analyze"}%8s ${"optim"}%8s ${"plan"}%8s ${"exec"}%8s ${"total"}%8s ${"jan#"}%5s ${"janMs"}%7s ${"jitMs"}%7s")
-    for (name <- names; rep <- 1 to reps) {
+    def runOne(name: String, rep: Int): Unit = {
       val fn = SparkEntry.queries(name)
       // cross-sf codegen warm probe: execute the same query once at
       // warmDir (untimed here — its cost prints as wrm) just before the
@@ -103,6 +115,14 @@ object BenchProfile {
       spark.catalog.clearCache()
       println(f"$name%-28s $rep%3d $tBuild%8.1f $tAna%8.1f $tOpt%8.1f $tPlan%8.1f $tExec%8.1f ${tBuild + tAna + tOpt + tPlan + tExec}%8.1f ${jan1 - jan0}%5d ${janMs1 - janMs0}%7.0f ${jit1 - jit0}%7d")
     }
+    if (passOrder) for (rep <- 1 to reps) {
+      val (jan0, janMs0) = janino; val jit0 = jitMs
+      val t0 = System.nanoTime()
+      names.foreach(runOne(_, rep))
+      val (jan1, janMs1) = janino
+      println(f"pass $rep%3d: ${names.size} queries ${ms(t0)}%8.1f ms, compiled ${jan1 - jan0} classes (${janMs1 - janMs0}%.0f ms), jit ${jitMs - jit0} ms")
+    }
+    else for (name <- names; rep <- 1 to reps) runOne(name, rep)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -94,6 +95,13 @@ object Verify {
     writeProgress()
     System.err.println(f"[verify] ${done.size}/${queries.size} dumped in " +
       f"${(System.nanoTime() - t0) / 1e9}%.0f s (${failed.size} failed)")
+    // the pass's generated-class working set: with the codegen cache sized
+    // above it (GraftSession.tune), every distinct class compiles once
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .asScala.find(_.getName == "Metaspace").map(_.getUsage.getUsed / 1048576.0)
+      .getOrElse(0.0)
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    System.err.println(f"[verify] codegen compiled $compiled classes; metaspace $metaspaceMb%.0f MB")
     spark.stop()
   }
 }

@@ -49,6 +49,16 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
+      // generated-class cache: Spark keeps compiled whole-stage and
+      // expression classes in one JVM-wide LRU, built once per JVM from
+      // this static conf, default 100 entries. One pass over the declared
+      // surface compiles 5,200 distinct classes (graft.Verify at sf0.001,
+      // fresh JVM, unbounded cache); the 20-query floor mix alone compiles
+      // ~570, so at 100 every warm re-run of a query recompiled (and
+      // re-JITted) its classes. 8192 holds the whole surface with ~1.6x
+      // headroom; holding it cost ~13 MB of metaspace at the end of that
+      // pass (PLANS.md, "Codegen class cache", has the RSS readings).
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
 
   /** Aggressive ContextCleaner cadence for LONG-RUNNING multi-query
     * sessions (Verify's 270+-query dump; any app looping queries for

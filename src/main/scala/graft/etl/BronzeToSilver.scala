@@ -1,6 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.NeoWs
 
@@ -16,11 +18,21 @@ import graft.model.NeoWs
   *   - `_etl_batch_id` / processing timestamps injectable for deterministic
   *     replays (the reference stamps wall-clock, `:83-89`);
   *   - everything is codegen'd builtins — one narrow projection over one
-  *     Generate, no UDFs, no shuffle at all in this stage.
+  *     Generate, no shuffle at all in this stage; the only UDFs are the
+  *     zero-argument carriers of the per-run audit values ([[runValue]]).
   */
 object BronzeToSilver {
 
   val SourceSystem = "NeoWs API"
+
+  /** A value that changes from run to run (the injected processing instant,
+    * the batch id), handed to generated code by reference. Spark writes
+    * long, date and timestamp literals into the generated source, so as
+    * literals they made every feed-day's silver projection a new class to
+    * compile and JIT in a long-lived backfill session. A zero-argument UDF
+    * is not constant-folded, and its generated code reads the function from
+    * the references array, so the class is the same every day. */
+  private def runValue[T: TypeTag](v: T): Column = udf(() => v).apply()
 
   /** Read one-or-more bronze feed documents with the explicit schema. */
   def readBronze(spark: SparkSession, path: String): DataFrame =
@@ -35,11 +47,8 @@ object BronzeToSilver {
     */
   def transform(raw: DataFrame, batchId: Long,
                 processingTs: Option[java.time.Instant] = None): DataFrame = {
-    val procTs = processingTs
-      .map(i => lit(java.sql.Timestamp.from(i)).cast("timestamp"))
-      .getOrElse(current_timestamp())
-    val procDate = processingTs
-      .map(i => to_date(lit(java.sql.Timestamp.from(i))))
+    val procTs = processingTs.map(runValue(_)).getOrElse(current_timestamp())
+    val procDate = processingTs.map(i => to_date(runValue(i)))
       .getOrElse(current_date())
 
     raw
@@ -80,7 +89,7 @@ object BronzeToSilver {
       .withColumn("_processing_timestamp", procTs)
       .withColumn("_processing_date", procDate)
       .withColumn("_source_system", lit(SourceSystem))
-      .withColumn("_etl_batch_id", lit(batchId))
+      .withColumn("_etl_batch_id", runValue(batchId))
       .select(NeoWs.silverColumns.map(col): _*)
   }
 

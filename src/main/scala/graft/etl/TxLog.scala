@@ -480,6 +480,21 @@ object TxLog {
   private def stage(spark: SparkSession, table: String, df: DataFrame): Seq[Action] =
     stage(spark, table, df, partColsOf(table))
 
+  /** The partition count a plan's own top-level repartition or coalesce
+    * pins it to, looking through the projections and filters above it
+    * (which keep partitioning); None when the count is left to execution. */
+  private def pinnedParts(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Project,
+      RepartitionOperation}
+    plan match {
+      case r: RepartitionOperation => Some(r.numPartitions)
+      case p: Project => pinnedParts(p.child)
+      case f: LFilter => pinnedParts(f.child)
+      case _ => None
+    }
+  }
+
   private def stage(spark: SparkSession, table: String, df: DataFrame,
                     partCols: Seq[String], sized: Boolean = true): Seq[Action] = {
     val rel = s"data/${UUID.randomUUID()}"
@@ -508,18 +523,27 @@ object TxLog {
     // staged write of a few-MB frame produced 32 tiny part files per
     // commit — and every later CoW verb, footer harvest, file listing
     // and log replay paid O(files). COALESCE (merge-only, never a
-    // shuffle, applied AFTER identity assignment so assigned values are
-    // untouched) toward a byte target from the optimizer's size
-    // estimate — but never below MinStageParts: a caller staging ≤ that
-    // many partitions chose the layout deliberately (the fixtures'
+    // shuffle) toward a byte target from the optimizer's size estimate —
+    // but never below MinStageParts: a caller staging ≤ that many
+    // partitions chose the layout deliberately (the fixtures'
     // coalesce(1)/coalesce(2) determinism idiom), and OPTIMIZE (whose
     // INTO n layout is the verb's whole point) opts out via `sized`.
-    // Unknown estimates are huge (8 EB default), so target ≥ current and
-    // nothing changes — estimation failure degrades to the old layout,
+    // Identity values assigned upstream stay unique through the merge:
+    // monotonically_increasing_id is partition-local (the input
+    // partition's index sits in its upper bits), so rows of merged
+    // partitions keep distinct values. Unknown estimates are huge (8 EB
+    // default), so the target leaves the Int range and nothing changes —
+    // estimation failure degrades to the old layout,
     // never to a single giant file. Coalescing after a shuffle merges
     // reduce partitions without reducing map parallelism; for
     // shuffle-free frames the merged scan is exactly the small frame the
-    // estimate proved. Override via -Dgraft.txlog.stage.targetBytes /
+    // estimate proved. Nothing runs here: reading the frame's partition
+    // count would finalise an adaptive plan, executing a merge source's
+    // or CDC union's shuffles once here and again at write. A coalesce
+    // to at least the current count is a no-op, so the frame's count is
+    // needed only where the plan itself pins it ([[pinnedParts]]): there
+    // a coalesce would collapse into the caller's and undo its layout.
+    // Override via -Dgraft.txlog.stage.targetBytes /
     // -Dgraft.txlog.stage.minParts (a production deployment on real
     // file sizes would tune both).
     val stagedDf = if (!sized) stagedDf0 else {
@@ -527,11 +551,11 @@ object TxLog {
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
       val minParts = sys.props.get("graft.txlog.stage.minParts")
         .map(_.toInt).getOrElse(8)
-      val parts0 = stagedDf0.rdd.getNumPartitions
-      val est = stagedDf0.queryExecution.optimizedPlan.stats.sizeInBytes
-      val target = (est / targetBytes + 1)
-        .max(BigInt(minParts)).min(BigInt(parts0)).toInt
-      if (target < parts0) stagedDf0.coalesce(target) else stagedDf0
+      val plan = stagedDf0.queryExecution.optimizedPlan
+      val target = (plan.stats.sizeInBytes / targetBytes + 1).max(BigInt(minParts))
+      if (target.isValidInt && pinnedParts(plan).forall(target < _))
+        stagedDf0.coalesce(target.toInt)
+      else stagedDf0
     }
     stagedDf.createOrReplaceGlobalTempView(gv)
     // declared bloom columns (stored physical) ride as per-write parquet

@@ -46,4 +46,28 @@ class BenchSuspectSpec extends AnyFunSuite {
     val tiny = Map("qf" -> 1.2)
     assert(Bench.suspectsOf(tiny, h, 1.0, 0.4) == Seq("qf"))
   }
+
+  test("even-sized calibration samples take the lower, bar-tightening middle") {
+    // the upper middle (sorted(size/2)) loosened the bar on every
+    // even-sized sample; both calibrations only loosen as they grow
+    assert(Bench.lowerMedian(Seq(1.8, 1.2)) == 1.2)
+    assert(Bench.lowerMedian(Seq(0.9, 0.4, 0.7, 0.5)) == 0.5)
+    assert(Bench.lowerMedian(Seq(3.0, 1.0, 2.0)) == 2.0)
+  }
+
+  test("a 6x regression flags whatever the host factor and floor bar say") {
+    // 0.3 s best reading 1.9 s (6.3x): under the widest factor (3) and
+    // floor bar (2 s) the scaled arm absorbs it; the ratio ceiling does not
+    val h = Map("qf" -> 0.3, "qg" -> 0.3, "qt" -> 0.1)
+    val res = Map("qf" -> 1.9, "qg" -> 1.7, "qt" -> 0.7)
+    // qg is 5.7x (under the ceiling); qt is 7x but under the 1 s floor
+    assert(Bench.suspectsOf(res, h, 3.0, 2.0) == Seq("qf"))
+  }
+
+  test("a host factor above the threshold warns") {
+    assert(Bench.hostFactorWarning(1.72).isEmpty)
+    assert(Bench.hostFactorWarning(Bench.HostFactorWarnAbove).isEmpty)
+    val w = Bench.hostFactorWarning(2.27)
+    assert(w.exists(_.contains("host_factor 2.27")), w)
+  }
 }
